@@ -548,6 +548,7 @@ def main() -> None:
     # Stop the session FIRST so shutdown-time log lines (state-store
     # maintenance, executor teardown) can't land after the JSON result; the
     # final JSON line must be the last stdout the driver sees.
+    cores = spark.sparkContext.defaultParallelism
     spark.stop()
     sys.stdout.flush()
     sys.stderr.flush()
@@ -563,9 +564,9 @@ def main() -> None:
     # its 32-core run, which blanked PERF_r18's per-query comparison
     # (n_common: 0).  Additions-only: the legacy file keeps its exact
     # behavior for driver compatibility; the suffixed copy preserves
-    # each core count's detail side by side.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    with open(os.path.join(here, f"BENCH_QUERIES_c{cpus}.json"), "w") as fh:
+    # each core count's detail side by side, named after the session's
+    # actual parallelism.
+    with open(os.path.join(here, f"BENCH_QUERIES_c{cores}.json"), "w") as fh:
         fh.write(detail_line + "\n")
     print(detail_line)
     print(summary_line)

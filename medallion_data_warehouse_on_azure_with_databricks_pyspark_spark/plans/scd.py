@@ -215,6 +215,14 @@ def apply_changes(
     / ``scd2_part_dim`` driver lanes) take a key-unique source by
     contract and never route through this pick at all.
 
+    Against a standing ``target`` the picked feed is evaluated ONCE,
+    inside this call, into a driver-local relation: the merge consumes
+    it up to three times (expire join, insert join, delete keys), and a
+    lazy feed would re-run the pick for each.  The feed is broadcast by
+    the merge anyway, so it already fits on the driver, and nothing
+    outlives the returned frame.  The initial load (``target=None``)
+    consumes the feed once and stays lazy.
+
     ``apply_as_deletes`` (DLT parity — the reference's API surface accepts
     it at ``Gold_Products.py:98-105`` but leaves it unused) marks change
     rows matching the predicate as DELETE events.  Latest-wins per key
@@ -225,12 +233,20 @@ def apply_changes(
     are kept; under SCD1 the key's row is removed from the dimension.
     A later upsert re-creates the key as a brand-new current row.
     """
+    if stored_as_scd_type not in (1, 2):
+        raise ValueError(f"unsupported SCD type: {stored_as_scd_type}")
     attrs = track_history_column_list or [
         c
         for c in source.columns
         if c not in keys and c != sequence_by
     ]
     latest = latest_per_key(source, keys, sequence_by)
+    if target is not None:
+        # one partition, as adaptive execution coalesces a small aggregate:
+        # the inserts land in one file, each broadcast is a one-task job
+        latest = source.sparkSession.createDataFrame(
+            latest.toArrow(), latest.schema
+        ).coalesce(1)
     deletes = None
     if apply_as_deletes is not None:
         cond = (
@@ -250,15 +266,13 @@ def apply_changes(
         if deletes is not None:
             out = out.join(deletes, keys, "left_anti")
         return out
-    if stored_as_scd_type == 2:
-        if target is None:
-            # initial load: keys whose newest event is a delete never enter
-            return scd2_initial(latest, keys, attrs, now=now)
-        out = scd2_merge(target, latest, keys, attrs, now=now)
-        if deletes is not None:
-            out = _scd2_expire_deleted(out, deletes, keys, now=now)
-        return out
-    raise ValueError(f"unsupported SCD type: {stored_as_scd_type}")
+    if target is None:
+        # initial load: keys whose newest event is a delete never enter
+        return scd2_initial(latest, keys, attrs, now=now)
+    out = scd2_merge(target, latest, keys, attrs, now=now)
+    if deletes is not None:
+        out = _scd2_expire_deleted(out, deletes, keys, now=now)
+    return out
 
 
 def _scd2_expire_deleted(

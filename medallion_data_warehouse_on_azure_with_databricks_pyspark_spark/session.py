@@ -9,6 +9,8 @@ instead centralize a session builder with scale-aware defaults:
 * Arrow enabled for the Pandas-UDF extension operators.
 * UTC session timezone so timestamp-derived columns (``year`` etc.) are
   deterministic regardless of host timezone.
+* DataFrame call-site capture off: it costs Py4J round trips on every
+  Column call and only adds the Python call site to analysis errors.
 * delta-spark extension wired in *if importable*; otherwise the engine's
   parquet-based merge fallback (plans/merge.py) provides MERGE semantics.
 """
@@ -47,6 +49,15 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
+    # PySpark 4.x defaults this on: every Column/DataFrame call then walks
+    # the Python stack and makes ~10 extra Py4J round trips to record its
+    # call site, which only decorates analysis-error messages (the error
+    # itself, naming the column, is raised either way).  One medallion
+    # change batch (perfbench medallion_cdc, 4 vCPUs) made 5,800 Py4J
+    # round trips with it on and 2,500 with it off, 0.5-0.7 s of driver
+    # time.  A static conf: ``extra_conf`` overrides it when the session
+    # is built.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.sql.shuffle.partitions": "32",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),

@@ -18,18 +18,21 @@ directory we manage, and stream with the pinned schema thereafter
 (SURVEY.md §7.4.3).
 
 ``_rescued_data`` (Auto Loader parity, ``Bronze_Layer.py:20-23``): at every
-stream build we re-infer the source's *current* schema (parquet footer
-metadata only — no data scan) and diff it against the pin.  Columns that
-appeared after the pin are read alongside the pinned columns and folded
-into the ``_rescued_data`` JSON string per row (NULL when the row carries
-no drifted fields), then dropped — so downstream silver
-``drop('_rescued_data')`` behaves identically whether or not the source has
-drifted, and drifted data is *captured*, not silently lost.  The pin itself
-never moves (the declared bronze schema is stable); promote a rescued field
-by deleting the pin and re-capturing.  Type *changes* of pinned columns are
-out of scope for parquet sources (the column reader enforces the pinned
-type; a genuinely incompatible file fails the batch rather than corrupting
-rows — the same hard-fail Auto Loader gives without schema evolution mode).
+stream build we diff the column names in the landed files' parquet footers
+against the pin, on the driver and without a Spark job; only when some
+file carries a column outside the pin does Spark infer the source's
+*current* schema (footer metadata only — no data scan) for the drifted
+columns' types.  Columns that appeared after the pin are read alongside
+the pinned columns and folded into the ``_rescued_data`` JSON string per
+row (NULL when the row carries no drifted fields), then dropped — so
+downstream silver ``drop('_rescued_data')`` behaves identically whether or
+not the source has drifted, and drifted data is *captured*, not silently
+lost.  The pin itself never moves (the declared bronze schema is stable);
+promote a rescued field by deleting the pin and re-capturing.  Type
+*changes* of pinned columns are out of scope for parquet sources (the
+column reader enforces the pinned type; a genuinely incompatible file fails
+the batch rather than corrupting rows — the same hard-fail Auto Loader
+gives without schema evolution mode).
 
 Run-once semantics: the reference's ``trigger(once=True)`` is deprecated
 upstream; ``availableNow=True`` is the recommended equivalent — same
@@ -42,6 +45,9 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import urlparse
+
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,21 +80,57 @@ def capture_schema(
     return schema
 
 
+def _spark_skips(name: str) -> bool:
+    """Spark's file-listing rule: ``_``/``.`` names are hidden (except
+    partition directories like ``_k=v`` and the parquet summary files), as
+    are in-flight ``._COPYING_`` uploads."""
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    summary = name.startswith(("_metadata", "_common_metadata"))
+    return (hidden and not summary) or name.endswith("._COPYING_")
+
+
+def _landed_columns(source_dir: str) -> set[str] | None:
+    """Top-level column names across every file Spark would read under a
+    local parquet ``source_dir`` (footer metadata via pyarrow, partition
+    columns from ``k=v`` directories), or None for a non-local path."""
+    url = urlparse(source_dir)
+    if url.scheme not in ("", "file"):
+        return None
+    root = url.path if url.scheme else source_dir
+    names: set[str] = set()
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not _spark_skips(d)]
+        rel = os.path.relpath(dirpath, root)
+        names |= {d.split("=", 1)[0] for d in rel.split(os.sep) if "=" in d}
+        for f in filenames:
+            if not _spark_skips(f):
+                names.update(pq.read_schema(os.path.join(dirpath, f)).names)
+    return names
+
+
 def drifted_fields(
     spark: SparkSession, source_dir: str, pinned: T.StructType, fmt: str = "parquet"
 ) -> list[T.StructField]:
     """Fields present in the source's *current* schema but not in the pin.
 
-    Inference touches footer metadata only (``mergeSchema`` unions footers
-    across files — without it parquet inference reads a single footer and
-    would miss the drift); at very large prefixes bound the cost by pointing
-    the diff at the newest landing partition.
+    For a local parquet source the driver first diffs every landed file's
+    footer column names against the pin (pyarrow, no Spark job); a
+    drift-free source returns ``[]`` right there.  Only when some file
+    carries a name outside the pin (or the source is not local parquet)
+    does Spark infer the current schema, for the drifted fields' types —
+    footer metadata only, with ``mergeSchema`` unioning footers across
+    files (without it parquet inference reads a single footer and would
+    miss the drift).
     """
+    pinned_names = {f.name for f in pinned.fields}
+    if fmt == "parquet":
+        landed = _landed_columns(source_dir)
+        if landed is not None and landed <= pinned_names:
+            return []
     reader = spark.read.format(fmt)
     if fmt == "parquet":
         reader = reader.option("mergeSchema", "true")
     current = reader.load(source_dir).schema
-    pinned_names = {f.name for f in pinned.fields}
     return [f for f in current.fields if f.name not in pinned_names]
 
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 import math
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -74,6 +76,21 @@ def assert_storage_layout(path: str, backend: str) -> None:
     a ``_delta_log`` transaction log iff the delta branch is live."""
     has_log = os.path.isdir(os.path.join(path, "_delta_log"))
     assert has_log == (backend == "delta"), (path, backend)
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Yields a list that, once the block exits, holds the ids of the Spark
+    jobs launched inside it (read back through a job group)."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc._jsc.clearJobGroup()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _oracle_con(sf_dir: str):

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from medallion_data_warehouse_on_azure_with_databricks_pyspark_spark.plans import (
@@ -170,6 +171,62 @@ def test_apply_changes_w5_pick_plans_no_window(spark):
     plan = dim._jdf.queryExecution().executedPlan().toString()
     assert "partial_max_by" in plan
     assert "Window" not in plan
+
+
+@pytest.mark.parametrize("scd_type", [1, 2])
+def test_apply_changes_merge_evaluates_feed_once(spark, scd_type):
+    """Against a standing dimension the merge consumes the picked feed up
+    to three times (expire join, insert join, delete keys); the pick must
+    run exactly once, inside the call, and the merge plan must re-read
+    its rows instead of re-aggregating.  The initial load stays lazy."""
+    from tests.conftest import spark_jobs
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def counted(seq):
+        evaluated.add(1)
+        return seq
+
+    events = [(1, "a0", 1, "U"), (1, "a1", 2, "U"), (2, "b1", 1, "U"),
+              (3, "gone", 1, "D"), (4, "d", 1, "U")]
+    feed = spark.createDataFrame(
+        events, "id int, v string, seq int, op string"
+    ).withColumn("seq", counted("seq"))
+    kw = dict(keys=["id"], sequence_by="seq", stored_as_scd_type=scd_type,
+              track_history_column_list=["v"], apply_as_deletes="op = 'D'")
+    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id int, v string")
+    target = (
+        scd.scd1_initial(base, ["id"], ["v"], "dim_skey", now=T1, skey=F.col("id"))
+        if scd_type == 1 else scd.scd2_initial(base, ["id"], ["v"], now=T1)
+    )
+
+    with spark_jobs(spark) as initial_jobs:
+        scd.apply_changes(None, feed, now=T1, **kw)
+    assert initial_jobs == []  # the initial load plans lazily
+
+    with spark_jobs(spark) as merge_jobs:
+        out = scd.apply_changes(target, feed, now=T2, **kw)
+    assert merge_jobs and evaluated.value == len(events)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "max_by" not in plan
+    got = _rows(out, "id", "v")
+    assert evaluated.value == len(events)  # executing the merge re-ran nothing
+    if scd_type == 1:
+        assert got == [(1, "a1"), (2, "b1"), (4, "d")]
+    else:
+        assert got == [(1, "a"), (1, "a1"), (2, "b"), (2, "b1"), (3, "c"), (4, "d")]
+
+
+def test_apply_changes_refuses_unknown_scd_type_before_any_job(spark):
+    from tests.conftest import spark_jobs
+
+    feed = spark.createDataFrame([(1, "a", 1)], "id int, v string, seq int")
+    target = scd.scd2_initial(feed, ["id"], ["v"], now=T1)
+    with spark_jobs(spark) as jobs:
+        with pytest.raises(ValueError, match="unsupported SCD type"):
+            scd.apply_changes(target, feed, ["id"], "seq", stored_as_scd_type=3)
+    assert jobs == []
 
 
 T3 = "2024-03-01 00:00:00"

@@ -52,13 +52,15 @@ def test_rescue_captures_drifted_columns(spark, dirs, tmp_path):
     (``/root/reference/Bronze_Layer.py:20-23``)."""
     from pyspark.sql import functions as F
 
-    # Pin the schema + ingest the clean batch.
+    # Pin the schema + ingest two clean batches.
+    bronze.ingest(spark, dirs["src"], dirs["bronze"], dirs["ckpt"])
+    shutil.copy(EVENTS, os.path.join(dirs["src"], "part-001.parquet"))
     bronze.ingest(spark, dirs["src"], dirs["bronze"], dirs["ckpt"])
     n_clean = spark.read.parquet(dirs["bronze"]).count()
 
-    # A late file drifts: same columns plus a new `vendor` field.
+    # Only the newest of three files drifts: same columns plus `vendor`.
     drifted = (
-        spark.read.parquet(dirs["src"])
+        spark.read.parquet(EVENTS)
         .limit(10)
         .withColumn("vendor", F.concat(F.lit("v-"), F.col("event_id")))
     )
@@ -68,7 +70,7 @@ def test_rescue_captures_drifted_columns(spark, dirs, tmp_path):
 
     shutil.copy(
         glob.glob(os.path.join(staging, "part-*.parquet"))[0],
-        os.path.join(dirs["src"], "part-001-drifted.parquet"),
+        os.path.join(dirs["src"], "part-002-drifted.parquet"),
     )
 
     bronze.ingest(spark, dirs["src"], dirs["bronze"], dirs["ckpt"])
@@ -85,6 +87,37 @@ def test_rescue_captures_drifted_columns(spark, dirs, tmp_path):
     assert sample["v"] == f"v-{sample['event_id']}"
     # Clean rows (old and new) keep a NULL rescue column.
     assert out.filter(F.col("_rescued_data").isNull()).count() == n_clean
+
+
+def test_drift_free_stream_build_runs_no_spark_job(spark, dirs):
+    """The drift check reads the landed footers on the driver: with the
+    pin in place, building a drift-free stream launches no Spark job.
+    `_`/`.` files are never read by Spark, so a column only they carry
+    is not drift."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import spark_jobs
+
+    bronze.ingest(spark, dirs["src"], dirs["bronze"], dirs["ckpt"])  # pins
+    n_src = spark.read.parquet(dirs["bronze"]).count()
+    shutil.copy(EVENTS, os.path.join(dirs["src"], "part-001.parquet"))
+    extra = pq.read_table(EVENTS).slice(0, 3)
+    extra = extra.append_column("vendor", pa.array(["x"] * 3))
+    for hidden in ("_staging.parquet", ".inflight.parquet"):
+        pq.write_table(extra, os.path.join(dirs["src"], hidden))
+
+    schema_location = os.path.join(dirs["ckpt"], "_schema")
+    pinned = bronze.capture_schema(spark, dirs["src"], schema_location)
+    with spark_jobs(spark) as jobs:
+        assert bronze.drifted_fields(spark, dirs["src"], pinned) == []
+        bronze.read_stream(spark, dirs["src"], schema_location)
+    assert jobs == []
+
+    bronze.ingest(spark, dirs["src"], dirs["bronze"], dirs["ckpt"])
+    out = spark.read.parquet(dirs["bronze"])
+    assert out.count() == 2 * n_src
+    assert out.filter(out["_rescued_data"].isNotNull()).count() == 0
 
 
 def test_schema_pin_survives_capture_calls(spark, dirs):
